@@ -12,11 +12,12 @@ relational tables:
 * dense cube     = sequence()/explode gap-fill    (stack.py:129-238)
 * resampling     = broadcast neighbor-table join  (resample.py:5-149)
 * rollups        = groupBy(date_trunc) continuous aggregates (raw→hour→day)
-* compression    = Gorilla XOR / delta-of-delta binary codec (pandas UDF)
+* compression    = Gorilla XOR / delta-of-delta binary codec (Arrow kernel)
 * checkpointing  = per-cell ledger + lineage metrics rows
 
 Everything is DataFrame/SQL-declared so Catalyst handles pushdown, pruning,
-partial aggregation and AQE; Python appears only in Arrow-vectorized UDFs.
+partial aggregation and AQE; Python appears only in Arrow-vectorized UDFs
+and kernels.
 """
 
 __version__ = "0.1.0"

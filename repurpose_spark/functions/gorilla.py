@@ -10,10 +10,12 @@ token/timestamp/value streams as ``binary`` columns:
 * **XOR floats**: xor of consecutive float64 bit patterns, packed per
   block at the block's common (leading, meaningful-width) window.
 
-Both are implemented with numpy bit ops only (no per-row Python inside
-the numeric path) and wrapped as Arrow-batched pandas UDFs, per the
-BASELINE.json input_hint.  Fixed little-endian layout → byte-identical
-output across runs/partitions.
+``dod_encode``/``xor_encode`` are the per-row reference encoders.  The
+Spark path encodes with :func:`pack_arrow_batches`, one ``mapInArrow``
+kernel that runs every step over a whole Arrow batch on the list layout
+(flat values + offsets) with no per-row Python, byte-identical to the
+reference.  Decoding goes through Arrow-batched pandas UDFs.  Fixed
+little-endian layout → byte-identical output across runs/partitions.
 
 Layout (little-endian):
   magic 'RSG1' | codec u8 | n u64 | head values | nblocks u32 |
@@ -27,7 +29,7 @@ import struct
 import numpy as np
 import pandas as pd
 from pyspark.sql import functions as F
-from pyspark.sql.types import ArrayType, BinaryType, DoubleType, LongType
+from pyspark.sql.types import ArrayType, DoubleType, LongType
 
 MAGIC = b"RSG1"
 CODEC_DOD = 1
@@ -197,63 +199,230 @@ def xor_decode(buf: bytes) -> np.ndarray:
     return bits.view(np.float64)
 
 
-def dod_encode_batch(arrays: list) -> list:
-    """Batch DoD encode: byte-identical to ``dod_encode`` per row, but the
-    delta-of-delta + zigzag arithmetic runs ONCE over the whole Arrow
-    batch (concatenated), not per row — rows in tier tables are short
-    (tens of points), so per-row numpy dispatch dominated the per-row
-    path.  Regular streams (tier ticks, constant counts) hit the
-    width-0 fast path: no packing at all."""
-    vals = [np.asarray(a, dtype=np.int64) for a in arrays]
-    lens = np.fromiter((len(v) for v in vals), dtype=np.int64, count=len(vals))
-    if len(vals) == 0:
-        return []
-    V = np.concatenate(vals) if len(vals) > 1 else vals[0]
-    # global DoD: garbage at row boundaries, sliced away per row below
-    Z = np.empty(max(len(V) - 2, 0), dtype=np.uint64)
-    if len(V) > 2:
-        dod = V[2:] - 2 * V[1:-1] + V[:-2]
-        Z[:] = ((dod << 1) ^ (dod >> 63)).view(np.uint64)
-    offs = np.zeros(len(vals) + 1, dtype=np.int64)
-    np.cumsum(lens, out=offs[1:])
-    out = []
-    for i, a in enumerate(vals):
-        n = int(lens[i])
-        head = [MAGIC, struct.pack("<BQ", CODEC_DOD, n)]
-        if n == 0:
-            out.append(b"".join(head))
-            continue
-        head.append(struct.pack("<q", int(a[0])))
-        if n == 1:
-            out.append(b"".join(head))
-            continue
-        head.append(struct.pack("<q", int(a[1] - a[0])))
-        z = Z[offs[i] : offs[i] + n - 2]
-        nblocks = (len(z) + BLOCK - 1) // BLOCK
-        head.append(struct.pack("<I", nblocks))
-        if len(z) == 0 or not z.max():
-            # all-zero DoD (perfectly regular stream): widths 0, no payload
-            head.append(bytes(nblocks))
-            out.append(b"".join(head))
-            continue
-        widths, payloads = [], []
-        for b in range(nblocks):
-            blk = z[b * BLOCK : (b + 1) * BLOCK]
-            w = _bit_width(blk)
-            widths.append(w)
-            payloads.append(_pack_block(blk, w))
-        head.append(bytes(widths))
-        head.extend(payloads)
-        out.append(b"".join(head))
+# ------------------------------------------------------ Arrow batch kernel
+# The per-row encoders above, restated over a whole Arrow batch of list
+# rows: every step (DoD/XOR, block widths, bit packing, headers) is one
+# numpy pass over the batch's flat values, and the output is the
+# concatenation, row by row, of a fixed-layout header prefix, the block
+# parameters and the block payloads.
+_DOD_HEAD = np.dtype(
+    [("magic", "S4"), ("codec", "u1"), ("n", "<u8"), ("v0", "<i8"),
+     ("d0", "<i8"), ("nblocks", "<u4")]
+)
+_XOR_HEAD = np.dtype(
+    [("magic", "S4"), ("codec", "u1"), ("n", "<u8"), ("b0", "<u8"),
+     ("nblocks", "<u4")]
+)
+# values per Arrow slice: keeps every binary column's int32 offsets
+# (at most ~8 bytes per value plus a header per row) below 2 GiB
+_MAX_SLICE_VALUES = 1 << 26
+
+
+def _starts(lens: np.ndarray) -> np.ndarray:
+    """Exclusive prefix sum: where each run of ``lens`` begins."""
+    out = np.zeros(len(lens), dtype=np.int64)
+    np.cumsum(lens[:-1], out=out[1:])
     return out
 
 
-# ------------------------------------------------------------- Spark UDFs
-@F.pandas_udf(BinaryType())
-def encode_int_stream(s: pd.Series) -> pd.Series:
-    """array<long/int> column → DoD-compressed binary (Arrow-batched,
-    batch-vectorized delta arithmetic)."""
-    return pd.Series(dod_encode_batch(list(s)), index=s.index)
+def _run_sums(x: np.ndarray, lens: np.ndarray) -> np.ndarray:
+    """Sum of each consecutive run of ``lens`` elements of ``x``."""
+    c = np.zeros(len(x) + 1, dtype=np.int64)
+    np.cumsum(x, out=c[1:])
+    first = _starts(lens)
+    return c[first + lens] - c[first]
+
+
+def _bit_lengths(u: np.ndarray) -> np.ndarray:
+    """``int.bit_length`` of every uint64, by binary search on the bits."""
+    u = u.astype(np.uint64)
+    n = np.zeros(len(u), dtype=np.int64)
+    for s in (32, 16, 8, 4, 2, 1):
+        big = u >> np.uint64(s) != 0
+        n[big] += s
+        u[big] >>= np.uint64(s)
+    return n + (u != 0)
+
+
+def _blocks(m: np.ndarray):
+    """Block layout of per-row streams of ``m`` values: blocks per row,
+    values per block and each block's first value in the stream."""
+    nb = (m + BLOCK - 1) // BLOCK
+    k = np.arange(nb.sum()) - np.repeat(_starts(nb), nb)
+    cnt = np.minimum(BLOCK, np.repeat(m, nb) - k * BLOCK)
+    return nb, cnt, _starts(cnt)
+
+
+def _pack_blocks(vals: np.ndarray, cnt: np.ndarray, widths: np.ndarray):
+    """``b"".join(_pack_block(blk, w) ...)`` over every block at once:
+    each value goes MSB-first at its block's width into big-endian
+    64-bit words, every block padded to a whole byte.  Returns the
+    packed bytes and the bytes per block."""
+    nbytes = (cnt * widths + 7) // 8
+    total = int(nbytes.sum())
+    w = np.repeat(widths, cnt)
+    pos = np.repeat(_starts(nbytes) * 8, cnt) + (
+        np.arange(len(vals)) - np.repeat(_starts(cnt), cnt)
+    ) * w
+    live = w > 0
+    words = np.zeros(total // 8 + 2, dtype=np.uint64)
+    if live.any():
+        v, pos = vals[live], pos[live]
+        word, end = pos >> 6, (pos & 63) + w[live]
+        fits = end <= 64
+        hi = np.where(
+            fits,
+            v << np.where(fits, 64 - end, 0).astype(np.uint64),
+            v >> np.where(fits, 0, end - 64).astype(np.uint64),
+        )
+        # bit ranges never overlap, so OR-ing a word's parts is exact;
+        # ``word`` is sorted, so each word's parts are one reduceat run
+        first = np.flatnonzero(np.r_[True, word[1:] != word[:-1]])
+        words[word[first]] = np.bitwise_or.reduceat(hi, first)
+        # a value crossing a word boundary spills into the next word;
+        # at most one value crosses each boundary
+        sp = ~fits
+        words[word[sp] + 1] |= v[sp] << (128 - end[sp]).astype(np.uint64)
+    return words.astype(">u8").view(np.uint8)[:total], nbytes
+
+
+def _dod_parts(vals: np.ndarray, lens: np.ndarray) -> list:
+    v = vals.astype(np.int64, copy=False)
+    first = _starts(lens)
+    local = np.arange(len(v)) - np.repeat(first, lens)
+    dod = np.zeros(len(v), dtype=np.int64)
+    # int64 arithmetic wraps exactly like np.diff(np.diff(a))
+    dod[:-2] = v[2:] - 2 * v[1:-1] + v[:-2]
+    dod = dod[local + 2 < np.repeat(lens, lens)]
+    z = ((dod << 1) ^ (dod >> 63)).view(np.uint64)
+    nb, cnt, bstart = _blocks(np.maximum(lens - 2, 0))
+    widths = (
+        _bit_lengths(np.maximum.reduceat(z, bstart)) if len(cnt) else nb[:0]
+    )
+    payload, nbytes = _pack_blocks(z, cnt, widths)
+    head = np.zeros(len(lens), dtype=_DOD_HEAD)
+    head["magic"], head["codec"], head["n"] = MAGIC, CODEC_DOD, lens
+    one, two = lens >= 1, lens >= 2
+    head["v0"][one] = v[first[one]]
+    head["d0"][two] = v[first[two] + 1] - v[first[two]]
+    head["nblocks"] = nb
+    hlen = 13 + 8 * one + 12 * two
+    return [
+        (head, hlen),
+        (widths.astype(np.uint8), nb),
+        (payload, _run_sums(nbytes, nb)),
+    ]
+
+
+def _xor_parts(vals: np.ndarray, lens: np.ndarray) -> list:
+    bits = np.ascontiguousarray(vals, dtype=np.float64).view(np.uint64)
+    first = _starts(lens)
+    local = np.arange(len(bits)) - np.repeat(first, lens)
+    x = np.zeros(len(bits), dtype=np.uint64)
+    x[:-1] = bits[1:] ^ bits[:-1]
+    x = x[local + 1 < np.repeat(lens, lens)]
+    nb, cnt, bstart = _blocks(np.maximum(lens - 1, 0))
+    if len(cnt):
+        ored = np.bitwise_or.reduceat(x, bstart)
+        lead = 64 - _bit_lengths(np.maximum.reduceat(x, bstart))
+        tz = _bit_lengths(ored & (~ored + np.uint64(1))) - 1
+        width = np.where(ored == 0, 0, 64 - lead - tz)
+        shift = np.where(width > 0, tz, 0).astype(np.uint64)
+        x = x >> np.repeat(shift, cnt)
+    else:
+        lead = width = nb[:0]
+    payload, nbytes = _pack_blocks(x, cnt, width)
+    head = np.zeros(len(lens), dtype=_XOR_HEAD)
+    head["magic"], head["codec"], head["n"] = MAGIC, CODEC_XOR, lens
+    one, two = lens >= 1, lens >= 2
+    head["b0"][one] = bits[first[one]]
+    head["nblocks"] = nb
+    hlen = 13 + 8 * one + 4 * two
+    params = np.stack([lead, width], axis=1).astype(np.uint8).ravel()
+    return [
+        (head, hlen),
+        (params, 2 * nb),
+        (payload, _run_sums(nbytes, nb)),
+    ]
+
+
+def _assemble(parts: list, rows: int):
+    """Row r of the output is the concatenation of every part's r-th
+    run: the first ``hlen[r]`` bytes of the header record, then the
+    block parameters, then the payload.  Returns (bytes, int64 offsets)."""
+    (head, hlen), *rest = parts
+    rec = head.view(np.uint8).reshape(rows, head.dtype.itemsize)
+    srcs = [(rec[np.arange(rec.shape[1]) < hlen[:, None]], hlen)] + rest
+    row_len = sum(lens for _, lens in srcs)
+    offs = np.zeros(rows + 1, dtype=np.int64)
+    np.cumsum(row_len, out=offs[1:])
+    out = np.empty(int(offs[-1]), dtype=np.uint8)
+    at = offs[:-1].copy()
+    for src, lens in srcs:
+        out[np.repeat(at - _starts(lens), lens) + np.arange(len(src))] = src
+        at += lens
+    return out, offs
+
+
+def encode_list_array(arr, codec: int, name: str):
+    """One Arrow list<int64> (``CODEC_DOD``) or list<double>
+    (``CODEC_XOR``) array → the binary array whose row r is
+    ``dod_encode``/``xor_encode`` of list r, byte for byte.
+
+    The format has no validity bitmap, so a NULL list or a NULL element
+    raises ``ValueError`` naming ``name`` instead of being rewritten
+    (a NULL int would otherwise come back as INT64_MIN, a float as NaN).
+    """
+    import pyarrow as pa
+
+    if arr.null_count:
+        raise ValueError(f"cannot encode column {name!r}: NULL list")
+    offs = np.asarray(arr.offsets, dtype=np.int64)
+    flat = arr.values.slice(offs[0], offs[-1] - offs[0])
+    if flat.null_count:
+        raise ValueError(
+            f"cannot encode column {name!r}: NULL element in a list "
+            "(the packed format has no validity bitmap)"
+        )
+    lens = np.diff(offs)
+    vals = flat.to_numpy(zero_copy_only=False)
+    parts = (_dod_parts if codec == CODEC_DOD else _xor_parts)(vals, lens)
+    data, out_offs = _assemble(parts, len(lens))
+    return pa.Array.from_buffers(
+        pa.binary(), len(lens),
+        [None, pa.py_buffer(out_offs.astype(np.int32)), pa.py_buffer(data)],
+    )
+
+
+def pack_arrow_batches(batches, codecs: dict):
+    """``mapInArrow`` kernel of ``encode_series``: every column named in
+    ``codecs`` ({column: (codec, source name)}) holds lists and is
+    replaced by its encoded binary; other columns pass through.  Batches
+    are cut into row slices of at most ``_MAX_SLICE_VALUES`` values."""
+    import pyarrow as pa
+
+    for batch in batches:
+        names = batch.schema.names
+        lists = batch.column(names.index(next(iter(codecs))))
+        offs = np.asarray(lists.offsets, dtype=np.int64)
+        lo = 0
+        while lo < batch.num_rows:
+            hi = max(
+                lo + 1,
+                int(np.searchsorted(
+                    offs, offs[lo] + _MAX_SLICE_VALUES, side="right"
+                )) - 1,
+            )
+            part = batch.slice(lo, hi - lo)
+            yield pa.RecordBatch.from_arrays(
+                [
+                    encode_list_array(col, *codecs[c])
+                    if c in codecs else col
+                    for c, col in zip(names, part.columns)
+                ],
+                names=names,
+            )
+            lo = hi
 
 
 def dod_decode_fast(buf: bytes) -> np.ndarray:
@@ -276,70 +445,6 @@ def dod_decode_fast(buf: bytes) -> np.ndarray:
 @F.pandas_udf(ArrayType(LongType()))
 def decode_int_stream(s: pd.Series) -> pd.Series:
     return s.map(lambda b: dod_decode_fast(bytes(b)))
-
-
-def xor_encode_batch(arrays: list) -> list:
-    """Batch XOR encode: byte-identical to ``xor_encode`` per row; the
-    bit-view and xor-of-consecutive arithmetic run once over the whole
-    Arrow batch, with an all-identical fast path (constant series)."""
-    vals = [np.ascontiguousarray(np.asarray(a, dtype=np.float64)) for a in arrays]
-    if not vals:
-        return []
-    lens = np.fromiter((len(v) for v in vals), dtype=np.int64, count=len(vals))
-    V = np.concatenate(vals) if len(vals) > 1 else vals[0]
-    B = V.view(np.uint64)
-    X = np.empty(max(len(B) - 1, 0), dtype=np.uint64)
-    if len(B) > 1:
-        X[:] = B[1:] ^ B[:-1]
-    offs = np.zeros(len(vals) + 1, dtype=np.int64)
-    np.cumsum(lens, out=offs[1:])
-    out = []
-    for i in range(len(vals)):
-        n = int(lens[i])
-        head = [MAGIC, struct.pack("<BQ", CODEC_XOR, n)]
-        if n == 0:
-            out.append(b"".join(head))
-            continue
-        o = offs[i]
-        head.append(struct.pack("<Q", int(B[o])))
-        if n == 1:
-            out.append(b"".join(head))
-            continue
-        x = X[o : o + n - 1]
-        nblocks = (len(x) + BLOCK - 1) // BLOCK
-        head.append(struct.pack("<I", nblocks))
-        if not x.any():
-            # constant series: every block (lead=64, width=0), no payload
-            head.append(b"\x40\x00" * nblocks)
-            out.append(b"".join(head))
-            continue
-        params, payloads = [], []
-        for b in range(nblocks):
-            blk = x[b * BLOCK : (b + 1) * BLOCK]
-            nz = blk[blk != 0]
-            if len(nz) == 0:
-                lead, width = 64, 0
-            else:
-                lead = 64 - int(nz.max()).bit_length()
-                ored = int(np.bitwise_or.reduce(nz))
-                tz = (ored & -ored).bit_length() - 1
-                lead, width = lead, 64 - lead - tz
-            params.append(struct.pack("<BB", lead, width))
-            if width:
-                payloads.append(
-                    _pack_block(blk >> np.uint64(64 - lead - width), width)
-                )
-        head.extend(params)
-        head.extend(payloads)
-        out.append(b"".join(head))
-    return out
-
-
-@F.pandas_udf(BinaryType())
-def encode_float_stream(s: pd.Series) -> pd.Series:
-    """array<double> column → Gorilla-XOR binary (Arrow-batched,
-    batch-vectorized xor arithmetic)."""
-    return pd.Series(xor_encode_batch(list(s)), index=s.index)
 
 
 @F.pandas_udf(ArrayType(DoubleType()))

@@ -6,7 +6,8 @@ per series: timestamps DoD-encoded, values XOR-encoded (functions/gorilla).
 The reshape is ``sort_array(collect_list(struct(tick, v)))`` — an
 associative aggregation, so it is deterministic under any partitioning and
 keeps map-side combine; only the final array→binary step leaves the JVM,
-through one Arrow-batched pandas UDF per column.
+through one ``mapInArrow`` kernel that encodes every column of a whole
+Arrow batch at once (functions/gorilla.pack_arrow_batches).
 
 The packed table is cell-partitioned; decode is the exact inverse and the
 round-trip is bit-exact (tests/test_gorilla.py).
@@ -18,10 +19,11 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from repurpose_spark.functions.gorilla import (
+    CODEC_DOD,
+    CODEC_XOR,
     decode_float_stream,
     decode_int_stream,
-    encode_float_stream,
-    encode_int_stream,
+    pack_arrow_batches,
 )
 
 
@@ -40,7 +42,15 @@ def encode_series(
     (ts2img.py:333-340, see functions/quantize.py) and then DoD-encoded
     like any int column (bounded error scale/2; grid-aligned values are
     exact).  Lossless floats belong in ``float_cols`` (XOR path) instead.
+
+    The packed format has no validity bitmap: a NULL tick or value
+    raises ``ValueError`` naming its column rather than being encoded
+    as some other number.
     """
+    from functools import partial
+
+    from pyspark.sql.types import BinaryType, StructField, StructType
+
     from repurpose_spark.functions.quantize import quantize
 
     key_cols = list(key_cols)
@@ -50,7 +60,11 @@ def encode_series(
             tier = tier.withColumn(c, quantize(c, sf, off))
         int_cols = list(int_cols) + list(quantize_cols)
     vals = list(int_cols) + list(float_cols)
-    packed = (
+    # output column -> (codec, source column, element type)
+    streams = {"ts_bin": (CODEC_DOD, tick_col, "long")}
+    streams.update({f"{c}_bin": (CODEC_DOD, c, "long") for c in int_cols})
+    streams.update({f"{c}_bin": (CODEC_XOR, c, "double") for c in float_cols})
+    lists = (
         tier.groupBy(*key_cols)
         .agg(
             F.sort_array(
@@ -60,22 +74,22 @@ def encode_series(
         .select(
             *key_cols,
             F.size("s").alias("n_points"),
-            encode_int_stream(F.col("s.t").cast("array<long>")).alias("ts_bin"),
             *[
-                encode_int_stream(F.col(f"s.{c}").cast("array<long>")).alias(
-                    f"{c}_bin"
-                )
-                for c in int_cols
-            ],
-            *[
-                encode_float_stream(
-                    F.col(f"s.{c}").cast("array<double>")
-                ).alias(f"{c}_bin")
-                for c in float_cols
+                F.col("s.t" if src == tick_col else f"s.{src}")
+                .cast(f"array<{t}>")
+                .alias(out)
+                for out, (_, src, t) in streams.items()
             ],
         )
     )
-    return packed
+    schema = StructType(
+        [
+            StructField(f.name, BinaryType(), True) if f.name in streams else f
+            for f in lists.schema.fields
+        ]
+    )
+    codecs = {out: (codec, src) for out, (codec, src, _) in streams.items()}
+    return lists.mapInArrow(partial(pack_arrow_batches, codecs=codecs), schema)
 
 
 def decode_series(

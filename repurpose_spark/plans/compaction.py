@@ -125,5 +125,12 @@ def compact_table(
     # manifest rides the compact commit like write/append/batch commits:
     # pre-compact snapshots expire (their files are gone — Iceberg keeps
     # them until expiry), but the POST-compact state is time-travelable
-    wh._commit(table, "compact", {**metrics, **wh._snapshot_state(table)})
+    wh._commit(
+        table, "compact",
+        {
+            **metrics,
+            **wh._snapshot_state(table),
+            "schema": wh.file_schema(df, partition_by),
+        },
+    )
     return metrics

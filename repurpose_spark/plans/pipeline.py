@@ -30,6 +30,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from repurpose_spark.config import DEFAULT, EngineConfig
 from repurpose_spark.operators.encode import encode_series
@@ -160,9 +161,42 @@ class TierPipeline:
         self.wh._commit_many(self._ledger_table(), "append", rows)
 
     # -- batch planning ------------------------------------------------------
+    def _list_input(self, input_path: str) -> dict:
+        """{file URI: byte size} of every data file under ``input_path``,
+        from one recursive ``FileSystem.listStatus`` walk — driver-side
+        metadata, no Spark job (``spark.read.parquet(p).inputFiles()``
+        costs a schema-inference job; ``fs.listFiles`` builds
+        LocatedFileStatus objects whose permissions fork a shell per file
+        when native Hadoop is absent).  Applies Spark's hidden-path rule
+        (skip names starting with ``.``, names starting with ``_`` that
+        hold no ``=``, and in-flight ``._COPYING_`` copies) and renders
+        paths as ``inputFiles()`` does (``file:///…``), so ledgered plans
+        keep matching."""
+        jvm = self.spark._jvm  # noqa: SLF001
+        conf = self.spark._jsc.hadoopConfiguration()  # noqa: SLF001
+        root = jvm.org.apache.hadoop.fs.Path(input_path)
+        fs = root.getFileSystem(conf)
+        sizes = {}
+        todo = [root]
+        while todo:
+            for st in fs.listStatus(todo.pop()):
+                p = st.getPath()
+                name = p.getName()
+                if (
+                    name.startswith(".")
+                    or (name.startswith("_") and "=" not in name)
+                    or name.endswith("._COPYING_")
+                ):
+                    continue
+                if st.isDirectory():
+                    todo.append(p)
+                else:
+                    sizes[fs.makeQualified(p).toUri().toString()] = st.getLen()
+        return sizes
+
     def plan_batches(self, input_path: str, n_batches: int) -> dict:
-        """File→batch assignment: whole input files, round-robin over the
-        sorted listing.  Batch membership becomes a PHYSICAL property —
+        """File→batch assignment: whole input files, size-balanced by
+        :func:`lpt_assign`.  Batch membership becomes a PHYSICAL property —
         each batch scans exactly its own files (the reference's imgbuffer
         reads only its chunk's date range, img2ts.py:798-802) instead of
         re-scanning the full table behind an unprunable hash filter,
@@ -172,7 +206,9 @@ class TierPipeline:
         The assignment is persisted in the ledger ('plan' rows) on first
         call and reused verbatim on resume, so a listing that changes
         mid-job (late-arriving files, compaction) can never shift batch
-        membership under a restarted run."""
+        membership under a restarted run.  The plan rows also carry the
+        input ``schema``, inferred once here (one Spark job) and passed
+        to every batch read, which then fires no inference job."""
         last_plan = self._ledgered_plan()
         if last_plan:
             # increment rows (run_incremental) carry n_batches=None and
@@ -187,8 +223,9 @@ class TierPipeline:
                 )
             return {b: r["files"] for b, r in last_plan.items()}
         # metadata-only listing (no data scan)
-        files = sorted(self.spark.read.parquet(input_path).inputFiles())
-        plan = self._assign_files(files, n_batches)
+        sizes = self._list_input(input_path)
+        schema = self.spark.read.parquet(input_path).schema.jsonValue()
+        plan = lpt_assign(list(sizes), sizes, n_batches)
         self.wh._commit_many(
             self._ledger_table(),
             "plan",
@@ -199,6 +236,7 @@ class TierPipeline:
                     "n_batches": n_batches,
                     "input_path": input_path,
                     "files": fs,
+                    "schema": schema,
                 }
                 for b, fs in plan.items()
             ],
@@ -260,8 +298,8 @@ class TierPipeline:
         # or the coarser tiers stay silently incomplete
         stale = sorted(set(plan) - self._finalized_batches())
         known = {f for r in plan.values() for f in r["files"]}
-        listing = sorted(self.spark.read.parquet(input_path).inputFiles())
-        new = [f for f in listing if f not in known]
+        sizes = self._list_input(input_path)
+        new = sorted(f for f in sizes if f not in known)
         orig_n = next(
             (
                 r["n_batches"]
@@ -274,7 +312,12 @@ class TierPipeline:
             per = files_per_batch or max(1, len(known) // max(len(plan), 1))
             n_new = -(-len(new) // per)  # ceil
             next_id = max(plan) + 1
-            sub = self._assign_files(new, n_new)
+            sub = lpt_assign(new, sizes, n_new)
+            # increments read with the planned run's input schema; a
+            # ledger planned before plan rows carried one infers per batch
+            schema = next(
+                (r["schema"] for r in plan.values() if "schema" in r), None
+            )
             self.wh._commit_many(
                 self._ledger_table(),
                 "plan",
@@ -286,6 +329,7 @@ class TierPipeline:
                         "increment": True,
                         "input_path": input_path,
                         "files": fs,
+                        **({"schema": schema} if schema else {}),
                     }
                     for k, fs in sub.items()
                 ],
@@ -337,58 +381,6 @@ class TierPipeline:
         out["n_new_files"] = len(new)
         return out
 
-    def _assign_files(self, files: list, n_batches: int) -> dict:
-        """Size-balanced assignment: greedy longest-processing-time over
-        the files' byte sizes (Hadoop FS metadata — works for any
-        supported filesystem, no data read), so every batch carries
-        ~equal bytes even when file sizes are wildly uneven (compacted +
-        fresh-ingest files mixed).  LPT is deterministic given the sorted
-        listing: ties break on file path.  Falls back to round-robin over
-        the sorted listing if size metadata is unavailable."""
-        # ONE recursive listing for all sizes (listFiles iterator) — a
-        # per-file getFileStatus would be one RPC per file, ~1.6M calls
-        # at the design scale's input; object stores bill and throttle
-        # those
-        sizes = None
-        try:
-            jvm = self.spark._jvm  # noqa: SLF001
-            conf = self.spark._jsc.hadoopConfiguration()  # noqa: SLF001
-            # list from the deepest common ANCESTOR DIRECTORY of all
-            # files (whole path components — a string prefix like /a/b
-            # vs /a/bd would lie)
-            prefix = files[0].rsplit("/", 1)[0]
-            while not all(f.startswith(prefix + "/") for f in files):
-                shorter = prefix.rsplit("/", 1)[0]
-                if shorter == prefix:
-                    # no shared '/'-delimited ancestor (e.g. mixed URI
-                    # schemes): rsplit stops shrinking — bail to the
-                    # round-robin fallback instead of spinning forever
-                    raise ValueError("no common ancestor directory")
-                prefix = shorter
-            p = jvm.org.apache.hadoop.fs.Path(prefix)
-            fs = p.getFileSystem(conf)
-            it = fs.listFiles(p, True)
-            # normalize URIs: Hadoop Path.toString() renders file:/x
-            # where inputFiles() gives file:///x — key on (netloc, path)
-            from urllib.parse import urlparse
-
-            def _k(u):
-                q = urlparse(u)
-                return (q.netloc, q.path)
-
-            raw = {}
-            while it.hasNext():
-                st = it.next()
-                raw[_k(st.getPath().toString())] = st.getLen()
-            sizes = {f: raw.get(_k(f)) for f in files}
-            if any(v is None for v in sizes.values()):
-                sizes = None
-        except Exception:
-            sizes = None
-        if sizes is None:
-            return {b: files[b::n_batches] for b in range(n_batches)}
-        return lpt_assign(files, sizes, n_batches)
-
     # -- tiers ---------------------------------------------------------------
 
     def hourly_table(self) -> str:
@@ -433,7 +425,13 @@ class TierPipeline:
         # file mode iterates the LEDGERED plan's batch ids — they can
         # extend past n_batches when run_incremental appended new files
         batch_ids = sorted(plan) if plan is not None else range(n_batches)
-        done = self.completed_batches()
+        recs = self.wh.snapshots(self._ledger_table())
+        done = {r["batch_id"] for r in recs if r.get("status") == "done"}
+        schemas = {
+            r["batch_id"]: r.get("schema")
+            for r in recs
+            if r.get("status") == "plan"
+        }
         n_run = 0
         for b in batch_ids:
             if b in done:
@@ -448,9 +446,10 @@ class TierPipeline:
                     if fail_after_batch is not None and n_run >= fail_after_batch:
                         raise RuntimeError(f"injected crash after batch {b}")
                     continue
-                batch = self.spark.read.option(
-                    "basePath", input_path
-                ).parquet(*files)
+                reader = self.spark.read.option("basePath", input_path)
+                if schemas.get(b) is not None:
+                    reader = reader.schema(StructType.fromJson(schemas[b]))
+                batch = reader.parquet(*files)
             else:
                 batch = seqs.where(
                     F.pmod(
@@ -467,20 +466,21 @@ class TierPipeline:
                 epoch=self.cfg.epoch,
                 sketch_distinct=self.sketch_distinct,
                 sketch_quantiles=self.sketch_quantiles,
-            ).cache()
+            ).repartition("cell_id").cache()
             # idempotent commit: the batch owns its own partition and
             # overwrites it wholesale — no dynamic-overwrite staging or
             # full-table listing; routed through the Warehouse so the
             # Iceberg backend gets the same contract via
             # overwritePartitions (ADVICE r1: never bypass the abstraction)
             self.wh.write_batch_partition(
-                hourly.repartition("cell_id"),
+                hourly,
                 self.hourly_table(),
                 b,
                 partition_by=["cell_id"],
             )
             # per-cell lineage from the cached tier (tiny: ~1/unit_dt of
-            # raw), not a parquet re-read — one extra small job per batch
+            # raw), not a parquet re-read.  The cache is already
+            # partitioned by cell_id, so this groupBy needs no shuffle
             per_cell = (
                 hourly.groupBy("cell_id")
                 .agg(

@@ -88,5 +88,15 @@ def expire_tier(
         "n_kept": n_keep,
         "n_dropped": n_total - n_keep,
     }
-    wh._commit(table, "expire", metrics)
+    # the rewrite replaced every data file: commit it as a full manifest
+    # with its file schema, like a compaction, so reads and time travel
+    # see the post-expiry files
+    wh._commit(
+        table, "expire",
+        {
+            **metrics,
+            **wh._snapshot_state(table),
+            "schema": wh.file_schema(keep, partition_by),
+        },
+    )
     return metrics

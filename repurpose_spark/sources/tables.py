@@ -16,6 +16,7 @@ import shutil
 import time
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 
 def _iceberg_available(spark: SparkSession) -> bool:
@@ -33,7 +34,16 @@ class Warehouse:
     Parquet layout: ``<root>/<table>/data/...`` plus
     ``<root>/<table>/_snapshots.jsonl`` — one JSON line per committed write
     (the analog of Iceberg snapshot metadata and of the reference's
-    ``000_log`` dirs, img2ts.py:754)."""
+    ``000_log`` dirs, img2ts.py:754).
+
+    Every commit that changes data files carries, next to its file
+    manifest, the ``schema`` of the parquet files it wrote (the hive
+    partition columns excluded), as Iceberg table metadata carries the
+    table schema.  Reads pass it to Spark, which then skips the footer
+    inference job and infers only the partition columns, from the
+    directory names of the listing it does anyway.  A sidecar whose
+    newest manifest has no schema (an older warehouse) reads with
+    inference, as before."""
 
     def __init__(
         self, spark: SparkSession, root: str, catalog: str | None = None
@@ -108,7 +118,12 @@ class Warehouse:
             w = w.partitionBy(*partition_by)
         w.parquet(self.path(table))
         self._commit(
-            table, mode, {**(metrics or {}), **self._snapshot_state(table)}
+            table, mode,
+            {
+                **(metrics or {}),
+                **self._snapshot_state(table),
+                "schema": self.file_schema(df, partition_by),
+            },
         )
 
     def append(self, df: DataFrame, table: str, partition_by: list | None = None,
@@ -181,7 +196,11 @@ class Warehouse:
         self._commit(
             table,
             "overwrite_partitions",
-            {**(metrics or {}), **state},
+            {
+                **(metrics or {}),
+                **state,
+                "schema": self.file_schema(df, partition_by),
+            },
         )
 
     def write_batch_partition(
@@ -236,6 +255,9 @@ class Warehouse:
                 "batch_id": batch_id,
                 "snapshot_id": self._next_snapshot_id(table),
                 "batch_files": self._dir_files(table, f"batch_id={batch_id}"),
+                "schema": self.file_schema(
+                    df, ["batch_id", *(partition_by or [])]
+                ),
             },
         )
 
@@ -247,31 +269,34 @@ class Warehouse:
         live at commit time (the sidecar is the manifest), so a snapshot
         read scans exactly those files; ``basePath`` keeps hive
         partition columns.  Iceberg: native ``snapshot-id`` read
-        (cluster-only; no runtime jar in this sandbox)."""
+        (cluster-only; no runtime jar in this sandbox).
+
+        Both parquet reads pass the schema the commit recorded (the
+        newest manifest's, or the target snapshot's), so building the
+        DataFrame fires no Spark job."""
         if self.use_iceberg:
             r = self.spark.read
             if snapshot_id is not None:
                 r = r.option("snapshot-id", str(snapshot_id))
             return r.table(self._ident(table))
+        snaps = self._manifests(table)
         if snapshot_id is None:
-            return self.spark.read.parquet(self.path(table))
+            return self._reader(snaps[-1] if snaps else {}).parquet(
+                self.path(table)
+            )
         # reconstruct the file state AS OF the target commit by replaying
         # manifests in commit order: full manifests (write/append/compact)
         # reset the state, batch DELTA manifests replace their own
         # batch_id=<b>/ subtree only
         state = None
-        found = False
-        snaps = sorted(
-            (s for s in self.snapshots(table) if "snapshot_id" in s),
-            key=lambda s: s["snapshot_id"],
-        )
+        found = None
         for s in snaps:
             if s["snapshot_id"] > snapshot_id:
                 break
             state = self._apply_manifest(state, s)
             if s["snapshot_id"] == snapshot_id:
-                found = True
-        if not found or state is None:
+                found = s
+        if found is None or state is None:
             raise ValueError(
                 f"no file-tracked snapshot {snapshot_id} for {table!r}"
             )
@@ -290,7 +315,33 @@ class Warehouse:
                 "twin retains history across appends only; Iceberg "
                 "retains it until explicit expiry)"
             )
-        return self.spark.read.option("basePath", base).parquet(*files)
+        return self._reader(found).option("basePath", base).parquet(*files)
+
+    def _reader(self, manifest: dict):
+        """A DataFrameReader holding the manifest's recorded file schema,
+        if it has one."""
+        r = self.spark.read
+        if manifest.get("schema") is not None:
+            r = r.schema(StructType.fromJson(manifest["schema"]))
+        return r
+
+    @staticmethod
+    def file_schema(df: DataFrame, partition_by: list | None = None) -> dict:
+        """The schema (``StructType.jsonValue()``) of the parquet files a
+        write of ``df`` partitioned by ``partition_by`` leaves: its
+        columns minus the partition columns, which live in directory
+        names.  Spark marks every column nullable when it reads them."""
+        part = set(partition_by or ())
+        return StructType(
+            [f for f in df.schema.fields if f.name not in part]
+        ).jsonValue()
+
+    def _manifests(self, table: str) -> list:
+        """Manifest lines of the sidecar, oldest snapshot first."""
+        return sorted(
+            (s for s in self.snapshots(table) if "snapshot_id" in s),
+            key=lambda s: s["snapshot_id"],
+        )
 
     def snapshot_ids(self, table: str) -> list:
         """Committed snapshot ids, oldest first (parquet twin)."""
@@ -369,8 +420,9 @@ class Warehouse:
         replayed file state at the cutoff (Iceberg's expire_snapshots
         analog).  Later delta manifests keep replaying on top of the
         checkpoint, so the current state is unaffected; snapshots before
-        the cutoff stop being travel targets.  Lineage/metrics rows
-        (no snapshot_id) are kept forever.  The rewrite is atomic
+        the cutoff stop being travel targets.  The checkpoint keeps the
+        cutoff manifest's file schema.  Lineage/metrics rows (no
+        snapshot_id) are kept forever.  The rewrite is atomic
         (tmp + rename)."""
         recs = self.snapshots(table)
         manifests = sorted(
@@ -395,6 +447,8 @@ class Warehouse:
             "snapshot_id": cutoff,
             "files": sorted(state or []),
         }
+        if "schema" in manifests[-keep_last]:
+            checkpoint["schema"] = manifests[-keep_last]["schema"]
         others = [s for s in recs if "snapshot_id" not in s]
         tail = [s for s in manifests if s["snapshot_id"] > cutoff]
         tmp = self._meta(table) + ".tmp"

@@ -6,7 +6,7 @@ MEASURES (not fits) the JVM-serial components around each:
 * ``hourly``  — scan/explode → integer-bucket partial agg → shuffle →
   final agg → cache (the only pass over raw points)
 * ``daily``   — re-agg of the cached hourly partials, noop sink
-* ``packed``  — with_avg + Gorilla encode (Arrow pandas UDF), noop sink
+* ``packed``  — with_avg + Gorilla encode (mapInArrow kernel), noop sink
 
 Around every action we read (a) the JVM management beans of the
 (shared, local-mode) JVM — total GC time and JIT compilation time — and

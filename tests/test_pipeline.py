@@ -559,13 +559,72 @@ def test_incremental_heals_despite_compaction(spark, seqs, tmp_path):
     )
 
 
-def test_assign_files_mixed_schemes_falls_back_round_robin(spark, tmp_path):
-    """ADVICE r3 low #3: a listing with no common '/'-ancestor (mixed URI
-    schemes) must fall back to round-robin, not loop forever."""
-    pipe = TierPipeline(spark, Warehouse(spark, str(tmp_path)), CFG)
-    files = ["file:/a/p1.parquet", "s3a://bkt/p2.parquet", "hdfs://nn/p3.parquet"]
-    plan = pipe._assign_files(sorted(files), 2)
-    assert sorted(f for fs in plan.values() for f in fs) == sorted(files)
+def test_input_listing_matches_spark_input_files(spark, tmp_path):
+    """The planner's one-walk listing returns exactly the files (and
+    URIs) ``inputFiles()`` gives, under Spark's hidden-path rule: no
+    _SUCCESS, .crc, _temporary/ or ._COPYING_ entries, nested k=v/ dirs
+    kept; sizes are the files' byte sizes."""
+    import os
+    from urllib.parse import urlparse
+
+    path = str(tmp_path / "in")
+    synth_sequences(spark, 40).withColumn(
+        "k", F.substring("doc_id", -1, 1).cast("int") % 2
+    ).withColumn("j", F.lit("x")).write.partitionBy("k", "j").parquet(path)
+    os.makedirs(os.path.join(path, "_temporary", "0"))
+    a_file = next(
+        os.path.join(r, n) for r, _, ns in os.walk(path) for n in ns
+        if n.endswith(".parquet")
+    )
+    with open(a_file, "rb") as f:
+        data = f.read()
+    for extra in ("_temporary/0/part-9.parquet", "k=0/j=x/p.parquet._COPYING_"):
+        with open(os.path.join(path, extra), "wb") as f:
+            f.write(data)
+    names = {n for _, _, ns in os.walk(path) for n in ns}
+    assert "_SUCCESS" in names and any(n.endswith(".crc") for n in names)
+
+    pipe = TierPipeline(spark, Warehouse(spark, str(tmp_path / "wh")), CFG)
+    sizes = pipe._list_input(path)
+    assert sorted(sizes) == sorted(spark.read.parquet(path).inputFiles())
+    assert all(f.startswith("file:///") for f in sizes)
+    assert sizes == {f: os.path.getsize(urlparse(f).path) for f in sizes}
+
+
+def test_incremental_on_ledger_planned_without_schema(spark, tmp_path):
+    """A ledger planned before plan rows carried the input schema still
+    takes increments: one new file is one new file, and the refresh
+    touches exactly the cells of its docs."""
+    import json
+
+    path = _write_input(spark, synth_sequences(spark, 120), tmp_path, n_files=3)
+    wh = Warehouse(spark, str(tmp_path / "wh"))
+    pipe = TierPipeline(spark, wh, CFG, job_id="t")
+    pipe.run(input_path=path, n_batches=2)
+    meta = wh._meta(pipe._ledger_table())
+    with open(meta) as f:
+        recs = [json.loads(line) for line in f]
+    assert all("schema" in r for r in recs if r["status"] == "plan")
+    with open(meta, "w") as f:
+        for r in recs:
+            r.pop("schema", None)
+            f.write(json.dumps(r) + "\n")
+
+    new_docs = synth_sequences(spark, 126).where(F.col("doc_id") >= "doc00000120")
+    new_docs.coalesce(1).write.mode("append").parquet(path)
+    out = pipe.run_incremental(path)
+    assert out["n_new_files"] == 1
+    cells = sorted(
+        r[0]
+        for r in wh.read(pipe.hourly_table())
+        .where(F.col("doc_id") >= "doc00000120")
+        .select("cell_id").distinct().collect()
+    )
+    assert out["n_refreshed_cells"] == len(cells) > 0
+    rec = [s for s in wh.snapshots(pipe.packed_table())
+           if s.get("mode") == "overwrite_partitions"][-1]
+    assert rec["partitions"] == [f"cell_id={c}" for c in cells]
+    assert wh.read(pipe.packed_table()).count() == 126
 
 
 def test_finalize_auto_salts_hot_cells(spark, tmp_path):

@@ -262,3 +262,75 @@ def test_incremental_finalize_commits_partition_delta(spark, tmp_path):
     assert all("partition_files" in r and "files" not in r for r in recs)
     tiers = wh.read("inc_daily")
     assert tiers.count() > 0
+
+
+def _tiers_after_each_op(spark, tmp_path):
+    """Yield (op, warehouse, tier tables) after run, run_incremental,
+    compact, apply_retention and expire_snapshots of one pipeline."""
+    from repurpose_spark.config import EngineConfig
+    from repurpose_spark.plans.pipeline import TierPipeline
+    from repurpose_spark.sources.synthetic import synth_sequences
+
+    wh = Warehouse(spark, str(tmp_path / "wh"))
+    pipe = TierPipeline(spark, wh, EngineConfig(n_cells=8), job_id="t")
+    src = str(tmp_path / "in")
+    synth_sequences(spark, 80).repartition(2).write.parquet(src)
+    tiers = [pipe.hourly_table(), pipe.daily_table(), pipe.packed_table()]
+    pipe.run(input_path=src, n_batches=2)
+    yield "run", wh, tiers
+    synth_sequences(spark, 90).where(F.col("doc_id") >= "doc00000080").coalesce(
+        1
+    ).write.mode("append").parquet(src)
+    pipe.run_incremental(src)
+    yield "run_incremental", wh, tiers
+    pipe.compact()
+    yield "compact", wh, tiers
+    pipe.apply_retention({"hourly": "2020-01-01 02:00:00"})
+    yield "apply_retention", wh, tiers
+    pipe.expire_snapshots(keep_last=1)
+    yield "expire_snapshots", wh, tiers
+
+
+def test_read_schema_matches_inference_after_each_op(spark, tmp_path):
+    """Every tier's newest manifest records a file schema, and a read
+    with it has exactly the schema Spark's own inference gives."""
+    for op, wh, tiers in _tiers_after_each_op(spark, tmp_path):
+        for t in tiers:
+            assert "schema" in wh._manifests(t)[-1], (op, t)
+            assert (
+                wh.read(t).schema == spark.read.parquet(wh.path(t)).schema
+            ), (op, t)
+
+
+def test_read_with_recorded_schema_fires_no_job(spark, tmp_path):
+    """Building a current or time-travel read of a table whose sidecar
+    holds a schema launches no Spark job; without one (an older
+    warehouse) the read falls back to inference and still matches."""
+    import json
+
+    wh = Warehouse(spark, str(tmp_path))
+    t = "tt"
+    df = spark.createDataFrame(
+        [(1, "a", 0.5), (2, "b", 1.5)], "k long, cell string, v double"
+    )
+    wh.write(df, t, partition_by=["cell"])
+    wh.append(df, t, partition_by=["cell"])
+    sc = spark.sparkContext
+    sc.setJobGroup("wh-read-no-jobs", "Warehouse.read with a schema")
+    try:
+        cur = wh.read(t)
+        old = wh.read(t, snapshot_id=0)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(sc.statusTracker().getJobIdsForGroup("wh-read-no-jobs")) == []
+    assert cur.schema == spark.read.parquet(wh.path(t)).schema
+    assert old.schema == cur.schema and old.count() == 2
+
+    with open(wh._meta(t)) as f:
+        recs = [json.loads(line) for line in f]
+    with open(wh._meta(t), "w") as f:
+        for r in recs:
+            r.pop("schema", None)
+            f.write(json.dumps(r) + "\n")
+    assert wh.read(t).schema == cur.schema
+    assert wh.read(t, snapshot_id=0).count() == 2
