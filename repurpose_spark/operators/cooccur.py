@@ -28,6 +28,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from repurpose_spark.plans.materialize import materialize
+
 __all__ = ["bigram_lift", "token_entropy", "trending_terms"]
 
 _WS = r"\s+"
@@ -86,11 +88,10 @@ def bigram_lift(
     # per consumer (4+ scans, .explain-verified).  Same pattern as the
     # curation survivor set; results should be materialized before
     # long-lived reuse of the session frees the cache.
-    uni = (
+    uni = materialize(
         df.select(F.explode(_tokens(df, text_col)).alias("w"))
         .groupBy("w")
         .agg(F.count(F.lit(1)).alias("c"))
-        .persist()
     )
     cb = (
         bigrams.groupBy("w1", "w2")

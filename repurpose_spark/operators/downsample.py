@@ -49,6 +49,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from repurpose_spark.plans.materialize import materialize
+
 
 def ohlc(
     df: DataFrame,
@@ -720,7 +722,7 @@ def haar_energy(
         # re-derives the whole ancestor chain back through the initial
         # window sort (levels× the corpus sort; guide §2.4), and the
         # frames halve per level so the materialization is geometric
-        paired = (
+        paired = materialize(
             cur.groupBy(*keys, F.shiftright("i", 1).alias("p"))
             .agg(
                 even.alias("a"),
@@ -733,8 +735,8 @@ def haar_energy(
                 F.col("p").alias("i"),
                 ((F.col("a") + F.col("b")) / 2).alias("v"),
                 ((F.col("a") - F.col("b")) / 2).alias("d"),
-            )
-            .localCheckpoint()
+            ),
+            checkpoint=True,
         )
         ticks = F.round(F.col("d") * 10000).cast("long")
         outs.append(

@@ -29,6 +29,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from repurpose_spark.plans.materialize import materialize
+
 
 def value_bins(
     df: DataFrame,
@@ -461,9 +463,12 @@ def ks_drift(
     # subtrees (slice axis, current leg, previous leg) — without the
     # checkpoint each leg re-scans and re-aggregates the corpus (guide
     # §2.4); the frame itself is support-sized
-    c = df.groupBy(*key_cols, slice_col, value_col).agg(
-        F.count(F.lit(1)).alias("_n")
-    ).localCheckpoint()
+    c = materialize(
+        df.groupBy(*key_cols, slice_col, value_col).agg(
+            F.count(F.lit(1)).alias("_n")
+        ),
+        checkpoint=True,
+    )
     ws = Window.partitionBy(*key_cols).orderBy(slice_col)
     slices = (
         c.select(*key_cols, slice_col)

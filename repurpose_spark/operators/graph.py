@@ -32,6 +32,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from repurpose_spark.plans.materialize import materialize
+
 
 def connected_components(
     pairs: DataFrame,
@@ -53,14 +55,16 @@ def connected_components(
     # Union branches are otherwise two independent consumers of `pairs`,
     # i.e. the caller's whole candidate+verify pipeline runs twice
     # (measured 2x the verify kernel on doc_canonical); the pair set
-    # itself is component-frame-sized, so the checkpoint is cheap
-    edges = pairs.select(
-        F.col(src).alias("s"), F.col(dst).alias("d")
-    ).localCheckpoint()
-    edges = (
+    # itself is component-frame-sized, so the checkpoint is cheap.  An
+    # edge with a NULL endpoint joins nothing: it is dropped here
+    edges = materialize(
+        pairs.select(F.col(src).alias("s"), F.col(dst).alias("d")).dropna(),
+        checkpoint=True,
+    )
+    edges = materialize(
         edges.union(edges.select(F.col("d").alias("s"), F.col("s").alias("d")))
-        .distinct()
-        .localCheckpoint()
+        .distinct(),
+        checkpoint=True,
     )
 
     # propagate over EDGE ENDPOINTS only: an isolated vertex's label can
@@ -141,7 +145,7 @@ def _driver_components(edges: DataFrame) -> DataFrame:
 def _looped_components(edges: DataFrame, verts: DataFrame, max_iter: int):
     """Distributed min-label propagation with pointer jumping (the
     O(log diameter)-round scale path)."""
-    labels = verts.select("id", F.col("id").alias("comp")).localCheckpoint()
+    labels = materialize(verts.withColumn("comp", F.col("id")), checkpoint=True)
     changed = 0
 
     for _ in range(max_iter):
@@ -156,11 +160,11 @@ def _looped_components(edges: DataFrame, verts: DataFrame, max_iter: int):
         # derives from a persisted subtree); a checkpointed scan
         # self-joins trivially — and the per-round materialization is
         # needed anyway to truncate iterative lineage
-        hop = (
+        hop = materialize(
             labels.unionByName(msgs)
             .groupBy("id")
-            .agg(F.min("comp").alias("comp"))
-            .localCheckpoint()
+            .agg(F.min("comp").alias("comp")),
+            checkpoint=True,
         )
         # pointer jumping: replace every label with its label's label
         # (label(comp) <= comp always), collapsing chains exponentially —
@@ -168,7 +172,7 @@ def _looped_components(edges: DataFrame, verts: DataFrame, max_iter: int):
         # checkpointed: consumed by the convergence probe AND the next
         # round (msgs join, union, compare) — without it the
         # hop-self-join recomputes once per consumer
-        new_labels = (
+        new_labels = materialize(
             hop.join(
                 hop.select(
                     F.col("id").alias("comp"),
@@ -180,8 +184,8 @@ def _looped_components(edges: DataFrame, verts: DataFrame, max_iter: int):
             .select(
                 "id",
                 F.coalesce("comp2", "comp").alias("comp"),
-            )
-            .localCheckpoint()
+            ),
+            checkpoint=True,
         )
         changed = (
             new_labels.alias("n")

@@ -46,8 +46,10 @@ from repurpose_spark.operators.dedup import (
     materialize_dedup_index,
     minhash_probe_indexed,
 )
+from repurpose_spark.plans.materialize import materialize, materialize_scope
 
 
+@materialize_scope()  # every frame cached here lives for one call
 def ingest_with_dedup(
     wh,
     new_docs: DataFrame,
@@ -79,13 +81,12 @@ def ingest_with_dedup(
 
     # 1. within-batch exact dedup (min-id copy per fingerprint)
     fp = new_docs.withColumn("__fp", fingerprint64(text_col))
-    exact = (
+    exact = materialize(
         fp.withColumn(
             "__keep", F.min(id_col).over(Window.partitionBy("__fp"))
         )
         .where(F.col(id_col) == F.col("__keep"))
         .drop("__fp", "__keep")
-        .persist()
     )
     n_exact = exact.count()
 
@@ -94,7 +95,7 @@ def ingest_with_dedup(
         exact, id_col=id_col, text_col=text_col, threshold=threshold, **mh
     )
     losers = pairs.select(F.col("doc_b").alias(id_col)).distinct()
-    within = exact.join(losers, id_col, "left_anti").persist()
+    within = materialize(exact.join(losers, id_col, "left_anti"))
     n_within = within.count()
 
     bootstrap = not wh.exists(table)
@@ -113,7 +114,7 @@ def ingest_with_dedup(
             **mh,
         )
         dup_ids = hits.select(F.col("new_id").alias(id_col)).distinct()
-        accepted = within.join(dup_ids, id_col, "left_anti").persist()
+        accepted = materialize(within.join(dup_ids, id_col, "left_anti"))
         n_accepted = accepted.count()
     metrics = {
         "n_in": n_in,
@@ -141,9 +142,4 @@ def ingest_with_dedup(
     elif wh.exists(table):
         # all-duplicate batch: record the rejected ingest as lineage
         wh._commit(table, "noop-ingest", metrics)
-    for df in (exact, within):
-        try:
-            df.unpersist()
-        except Exception:
-            pass
     return metrics

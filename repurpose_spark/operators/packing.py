@@ -32,6 +32,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from repurpose_spark.plans.materialize import materialize
+
 
 def pack_sequences(
     seqs: DataFrame,
@@ -72,7 +74,7 @@ def pack_sequences(
     # and without frozen pids the two subtree evaluations could range-
     # partition boundary rows differently (execution-dependent sample
     # seed) and silently corrupt the prefix sums (ADVICE r2 high)
-    d = d.localCheckpoint(eager=True)
+    d = materialize(d, checkpoint=True)
     # exclusive per-group prefix over the per-(partition, group) partial
     # sums — a window over O(partitions × groups) ROWS, computed in-plan
     # (VERDICT r4 #4: the former driver-side collect/sort/accumulate was

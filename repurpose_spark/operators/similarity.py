@@ -17,6 +17,8 @@ import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from repurpose_spark.plans.materialize import materialize, materialize_scope
+
 
 def _dot(a, b):
     return F.aggregate(
@@ -91,37 +93,6 @@ def _lsh_signature_range(vec_col: str, dim: int, lo: int, hi: int, seed: int):
     return sig
 
 
-_SIG_CACHE: list = []  # persisted signature frames from prior calls
-_SIG_CACHE_LOCK = __import__("threading").Lock()
-# How many prior calls' signature frames stay persisted.  1 would
-# unpersist the frame backing the PREVIOUS call's returned-but-not-yet-
-# executed DataFrame (silent recompute of its LSH probe work — ADVICE r4
-# low); keeping a couple of generations makes the common
-# build-then-materialize-later pattern safe while still bounding the
-# leak from long-lived drivers issuing many similarity calls.  Callers
-# interleaving >_SIG_KEEP similarity builds before materializing should
-# materialize (or .persist() themselves) first.
-_SIG_KEEP = 2
-
-
-def _retire_sig_caches() -> None:
-    """Unpersist signature frames persisted by OLDER near-dup / label-
-    vote calls (ADVICE r3 low #4: repeated calls leaked cached RDDs),
-    keeping the most recent ``_SIG_KEEP`` generations so lazily-held
-    results from recent calls don't lose their cache (ADVICE r4 low).
-    Lock-guarded: concurrent jobs on one driver mutate the list safely."""
-    with _SIG_CACHE_LOCK:
-        doomed, _SIG_CACHE[:] = (
-            _SIG_CACHE[:-_SIG_KEEP],
-            _SIG_CACHE[-_SIG_KEEP:],
-        )
-    for df in doomed:
-        try:
-            df.unpersist()
-        except Exception:
-            pass
-
-
 def bound_lsh_buckets(
     sig_df: DataFrame,
     cap: int | None,
@@ -147,34 +118,28 @@ def bound_lsh_buckets(
     OUTPUT is inherent, not join waste.
 
     Cost when no bucket exceeds cap (the common case): one counts
-    aggregation over the signature frame — the frame should be persisted
-    by the caller so the probe and the join sides share one computation.
-    Each refinement round persists ITS refined frame and unpersists the
-    predecessor once the new cache is seeded, so repeated rounds never
-    accumulate cached RDDs (ADVICE r3 low #4); the final frame is left
-    persisted for the caller's self-join.
+    aggregation over the signature frame — the frame should be
+    materialized by the caller so the probe and the join sides share one
+    computation.  Each refinement round materializes its refined frame,
+    whose probe seeds it from the predecessor's cache; the predecessor
+    is released right after, so rounds never accumulate cached frames;
+    the final frame stays cached for the caller's self-join.
     """
-    if cap is None:
+    if cap is None or n_planes >= max_total_planes:
         return sig_df
-    bits = n_planes
-    prev = None  # predecessor awaiting unpersist (cache seeded by probe)
-    for _ in range(max_rounds):
-        if bits >= max_total_planes:
-            break
+
+    def oversized(df):
         over = (
-            sig_df.groupBy("sig")
+            df.groupBy("sig")
             .agg(F.count(F.lit(1)).alias("n"))
             .where(F.col("n") > cap)
         )
-        n_over, max_over = over.agg(
-            F.count(F.lit(1)), F.max("n")
-        ).collect()[0]
-        # the probe materialized sig_df's cache — its predecessor's
-        # blocks are now dead weight
-        if prev is not None:
-            prev.unpersist()
-            prev = None
-        if not n_over:
+        return over, *over.agg(F.count(F.lit(1)), F.max("n")).collect()[0]
+
+    bits = n_planes
+    over, n_over, max_over = oversized(sig_df)
+    for _ in range(max_rounds):
+        if not n_over or bits >= max_total_planes:
             break
         new_bits = min(
             max_total_planes,
@@ -182,8 +147,7 @@ def bound_lsh_buckets(
         )
         ext = _lsh_signature_range(vec_col, dim, bits, new_bits, seed)
         flag = F.broadcast(over.select("sig").withColumn("__over", F.lit(1)))
-        prev = sig_df
-        sig_df = (
+        refined = materialize(
             sig_df.join(flag, "sig", "left")
             .withColumn(
                 "sig",
@@ -192,13 +156,13 @@ def bound_lsh_buckets(
                 ).otherwise(F.col("sig")),
             )
             .drop("__over")
-        ).persist()
-        bits = new_bits
-    if prev is not None:
-        # loop ended without a probe of the last refined frame: seed its
-        # cache before dropping the predecessor it derives from
-        sig_df.count()
-        prev.unpersist()
+        )
+        # hand the predecessor to a scope that ends once the probe has
+        # seeded `refined` from it
+        with materialize_scope():
+            materialize(sig_df)
+            over, n_over, max_over = oversized(refined)
+        sig_df, bits = refined, new_bits
     return sig_df
 
 
@@ -314,7 +278,7 @@ def embedding_near_dup_pairs(
     from repurpose_spark.plans.parallelism import ensure_parallelism
 
     # signature math is CPU-bound per row: widen a narrow (single-file)
-    # scan; wide scans pass through with no added shuffle.  persist: the
+    # scan; wide scans pass through with no added shuffle.  Materialized: the
     # frame is consumed by the guard's counts probe AND both self-join
     # sides — one signature computation instead of three (at cluster
     # scale this is the write-survivors-to-a-table-between-stages move)
@@ -329,12 +293,10 @@ def embedding_near_dup_pairs(
         lsh_signature(vec_col, dim, n_planes, seed).alias("sig"),
     )
     if max_bucket is not None:
-        _retire_sig_caches()
-        sig = sig.persist()
         sig = bound_lsh_buckets(
-            sig, max_bucket, n_planes, dim, vec_col="v", seed=seed
+            materialize(sig), max_bucket, n_planes, dim, vec_col="v",
+            seed=seed,
         )
-        _SIG_CACHE.append(sig)
     cand = (
         sig.alias("a")
         .join(
@@ -514,12 +476,10 @@ def knn_label_vote(
         lsh_signature(vec_col, dim, n_planes, seed).alias("sig"),
     )
     if max_bucket is not None:
-        _retire_sig_caches()
-        sig = sig.persist()
         sig = bound_lsh_buckets(
-            sig, max_bucket, n_planes, dim, vec_col="v", seed=seed
+            materialize(sig), max_bucket, n_planes, dim, vec_col="v",
+            seed=seed,
         )
-        _SIG_CACHE.append(sig)
     cand = (
         sig.alias("a")
         .join(
@@ -596,8 +556,9 @@ def int8_quantize_embeddings(
         F.max(v[i]).alias(f"_mx{i}") for i in range(dim)
     ]
     row = emb.agg(*aggs).collect()[0]
-    mn = [float(row[f"_mn{i}"]) for i in range(dim)]
-    mx = [float(row[f"_mx{i}"]) for i in range(dim)]
+    # a bound is NULL only when every vector is: then no row is coded
+    mn = [float(row[f"_mn{i}"] or 0.0) for i in range(dim)]
+    mx = [float(row[f"_mx{i}"] or 0.0) for i in range(dim)]
 
     # Codes pass: vectorized Arrow/numpy kernel (guide §4.2).  The
     # former expression tree (per-element transform with the code
@@ -634,14 +595,17 @@ def int8_quantize_embeddings(
         safe = np.where(const, 1.0, span)
         for b in batches:
             ids, vec = b.column(0), b.column(1)
-            n = len(b)
+            ok = np.asarray(vec.is_valid())  # NULL vectors are skipped
             off = np.asarray(vec.offsets)
-            if n and (np.diff(off) < dim_).any():
+            start = off[:-1][ok]
+            n = len(start)
+            if n and (np.diff(off)[ok] < dim_).any():
                 raise ValueError(
                     "int8_quantize_embeddings: vector shorter than dim"
                 )
-            vals = np.asarray(vec.values, dtype=np.float32)
-            idx = off[:-1, None] + np.arange(dim_)
+            # the child's own dtype: float32 widens exactly, double stays
+            vals = np.asarray(vec.values)
+            idx = start[:, None] + np.arange(dim_)
             x = vals[idx.reshape(-1)].astype(np.float64).reshape(n, dim_)
             y = ((x - mn_np) * 255.0) / safe
             c0 = np.floor(y)
@@ -653,12 +617,16 @@ def int8_quantize_embeddings(
             acc = np.zeros(n, dtype=np.float64)
             for i in range(dim_):
                 acc = acc + term[:, i]
+            # ... and come back as NULL codes and sse
+            ends = np.concatenate([[0], np.cumsum(ok) * dim_]).astype(np.int32)
+            sse = np.zeros(len(b))
+            sse[ok] = acc
             codes = pa.ListArray.from_arrays(
-                np.arange(0, (n + 1) * dim_, dim_, dtype=np.int32),
-                pa.array(c.reshape(-1), type=pa.int32()),
+                ends, pa.array(c.reshape(-1), type=pa.int32()),
+                mask=pa.array(~ok),
             )
             yield pa.RecordBatch.from_arrays(
-                [ids, codes, pa.array(acc, type=pa.float64())],
+                [ids, codes, pa.array(sse, mask=~ok)],
                 names=[id_col, "codes", "sse"],
             )
 

@@ -40,6 +40,7 @@ from repurpose_spark.operators.rollup import (
     rollup_points,
     with_avg,
 )
+from repurpose_spark.plans.materialize import materialize, materialize_scope
 from repurpose_spark.sources.tables import Warehouse
 
 LEDGER = "_ledger"
@@ -457,39 +458,39 @@ class TierPipeline:
                     )
                     == b
                 )
-            pts = sequences_to_points(batch, self.cfg, with_ts=False)
-            hourly = rollup_points(
-                pts,
-                3600,
-                key_cols=["cell_id", "doc_id"],
-                dt_seconds=self.cfg.dt_seconds,
-                epoch=self.cfg.epoch,
-                sketch_distinct=self.sketch_distinct,
-                sketch_quantiles=self.sketch_quantiles,
-            ).repartition("cell_id").cache()
-            # idempotent commit: the batch owns its own partition and
-            # overwrites it wholesale — no dynamic-overwrite staging or
-            # full-table listing; routed through the Warehouse so the
-            # Iceberg backend gets the same contract via
-            # overwritePartitions (ADVICE r1: never bypass the abstraction)
-            self.wh.write_batch_partition(
-                hourly,
-                self.hourly_table(),
-                b,
-                partition_by=["cell_id"],
-            )
-            # per-cell lineage from the cached tier (tiny: ~1/unit_dt of
-            # raw), not a parquet re-read.  The cache is already
-            # partitioned by cell_id, so this groupBy needs no shuffle
-            per_cell = (
-                hourly.groupBy("cell_id")
-                .agg(
-                    F.count_distinct("doc_id").alias("n_series"),
-                    F.sum("n_points").alias("n_points"),
+            with materialize_scope():
+                pts = sequences_to_points(batch, self.cfg, with_ts=False)
+                hourly = materialize(rollup_points(
+                    pts,
+                    3600,
+                    key_cols=["cell_id", "doc_id"],
+                    dt_seconds=self.cfg.dt_seconds,
+                    epoch=self.cfg.epoch,
+                    sketch_distinct=self.sketch_distinct,
+                    sketch_quantiles=self.sketch_quantiles,
+                ).repartition("cell_id"))
+                # idempotent commit: the batch owns its own partition and
+                # overwrites it wholesale — no dynamic-overwrite staging or
+                # full-table listing; routed through the Warehouse so the
+                # Iceberg backend gets the same contract via
+                # overwritePartitions (ADVICE r1: never bypass the abstraction)
+                self.wh.write_batch_partition(
+                    hourly,
+                    self.hourly_table(),
+                    b,
+                    partition_by=["cell_id"],
                 )
-                .collect()
-            )
-            hourly.unpersist()
+                # per-cell lineage from the cached tier (tiny: ~1/unit_dt of
+                # raw), not a parquet re-read.  The cache is already
+                # partitioned by cell_id, so this groupBy needs no shuffle
+                per_cell = (
+                    hourly.groupBy("cell_id")
+                    .agg(
+                        F.count_distinct("doc_id").alias("n_series"),
+                        F.sum("n_points").alias("n_points"),
+                    )
+                    .collect()
+                )
             self._commit_batch(b, per_cell)
             n_run += 1
             if fail_after_batch is not None and n_run >= fail_after_batch:

@@ -18,6 +18,8 @@ import time
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
+from repurpose_spark.plans.materialize import materialize, materialize_scope
+
 
 def _iceberg_available(spark: SparkSession) -> bool:
     try:
@@ -458,6 +460,7 @@ class Warehouse:
         os.replace(tmp, self._meta(table))
         return {"expired": n_expired, "kept": keep_last}
 
+    @materialize_scope()  # the lineage checkpoint lives for one call
     def merge_into(
         self,
         updates: DataFrame,
@@ -594,7 +597,7 @@ class Warehouse:
             # merged is a LAZY plan over the table's current files — sever
             # the lineage before deleting directories it reads from, or
             # the overwrite job re-scans a path that no longer exists
-            merged = merged.localCheckpoint(eager=True)
+            merged = materialize(merged, checkpoint=True)
             for row in emptied:
                 shutil.rmtree(
                     os.path.join(

@@ -35,6 +35,25 @@ def test_components_merges_two_clusters_via_bridge(spark):
     assert set(got.values()) == {1}
 
 
+def test_components_drop_null_endpoint_edges(spark):
+    """An edge with a NULL endpoint is dropped: the driver union-find
+    and the looped path both label the graph as if it were absent."""
+    edges = [("a", "b"), ("b", "d"), (None, "c"), ("e", None), ("f", "g")]
+    pairs = spark.createDataFrame(edges, "doc_a string, doc_b string")
+    clean = spark.createDataFrame(
+        [e for e in edges if None not in e], "doc_a string, doc_b string"
+    )
+
+    def labels(df, **kw):
+        out = connected_components(df, **kw).collect()
+        return {r["doc_id"]: r["component"] for r in out}
+
+    want = labels(clean)
+    assert want == {"a": "a", "b": "a", "d": "a", "f": "f", "g": "f"}
+    assert labels(pairs) == want
+    assert labels(pairs, small_graph_max_edges=0) == want
+
+
 def test_components_match_union_find_property(spark):
     """Randomized cross-check: Spark min-label propagation equals a
     pure-python union-find on the same edge list (12 seeded graphs)."""

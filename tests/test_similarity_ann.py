@@ -172,8 +172,18 @@ def test_bucket_guard_bounds_adversarial_bucket(spark):
     ).persist()
     sizes_before = sig_df.groupBy("sig").count().collect()
     assert max(r["count"] for r in sizes_before) == n
+
+    def cached_rdds():
+        jsc = spark.sparkContext._jsc
+        return set(jsc.getPersistentRDDs().keySet().toArray())
+
+    before = cached_rdds()
     bounded = bound_lsh_buckets(sig_df, cap, n_planes, DIM, vec_col="v")
     sizes = [r["count"] for r in bounded.groupBy("sig").count().collect()]
+    # every superseded round, the caller's frame included, is released:
+    # only the final refined frame stays cached
+    assert len(cached_rdds() - before) == 1
+    assert not sig_df.storageLevel.useMemory
     assert sum(sizes) == n  # no rows lost
     assert max(sizes) <= cap  # quadratic join bounded by construction
     # candidate volume: sum n_b^2 collapses from n^2 to <= n*cap
@@ -239,22 +249,43 @@ class TestInt8Quantize:
             int8_quantize_embeddings,
         )
 
-        rows = [(1, [1.5, 2.0]), (2, [1.5, 4.0])]
-        df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+        # a double child keeps its precision: 0.1000000001 would round
+        # to a different float32 on each row, leaving a spurious error
+        rows = [(1, [0.1000000001, 2.0]), (2, [0.1000000001, 4.0])]
+        df = spark.createDataFrame(
+            rows, "vec_id long, embedding array<double>"
+        )
         got = {r["vec_id"]: r for r in
                int8_quantize_embeddings(df, dim=2).collect()}
         assert got[1]["codes"][0] == 0 and got[2]["codes"][0] == 0
         # constant dim reconstructs exactly -> contributes 0 error
         assert got[1]["codes"][1] == 0 and got[2]["codes"][1] == 255
+        assert got[1]["sse"] == 0.0 and got[2]["sse"] == 0.0
 
     def test_extremes_land_on_0_and_255(self, spark):
         from repurpose_spark.operators.similarity import (
             int8_quantize_embeddings,
         )
 
-        rows = [(i, [float(i)]) for i in range(11)]
+        # a NULL vector codes to NULL; a short non-NULL one still raises
+        rows = [(i, [float(i)]) for i in range(11)] + [(11, None)]
         df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-        got = {r["vec_id"]: r["codes"][0] for r in
+        out = {r["vec_id"]: r for r in
                int8_quantize_embeddings(df, dim=1).collect()}
+        assert out[11]["codes"] is None and out[11]["sse"] is None
+        nulls = df.where("vec_id = 11")
+        assert [tuple(r) for r in int8_quantize_embeddings(
+            nulls, dim=1).collect()] == [(11, None, None)]
+        got = {i: r["codes"][0] for i, r in out.items() if i != 11}
         assert got[0] == 0 and got[10] == 255
         assert all(0 <= c <= 255 for c in got.values())
+        short = spark.createDataFrame(
+            [(1, [1.0, 2.0]), (2, [1.0])],
+            "vec_id long, embedding array<float>",
+        )
+        # (the bounds pass indexes every dim first; with ANSI off the
+        # codes kernel's own length check is what fires)
+        with pytest.raises(
+            Exception, match="INVALID_ARRAY_INDEX|vector shorter than dim"
+        ):
+            int8_quantize_embeddings(short, dim=2).collect()
