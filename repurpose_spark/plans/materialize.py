@@ -37,7 +37,10 @@ def _release(df: DataFrame, checkpoint: bool = False) -> None:
 def materialize(df: DataFrame, checkpoint: bool = False) -> DataFrame:
     """``df`` persisted (lazily), or locally checkpointed (eagerly) when
     ``checkpoint``, and registered with the innermost open scope."""
-    df = df.localCheckpoint() if checkpoint else df.persist()
+    if checkpoint:
+        df = df.localCheckpoint()
+    elif not df.is_cached:  # re-persisting only logs a warning
+        df.persist()
     stack = _SCOPES.__dict__.get("stack")
     if stack:
         stack[-1].append((df, checkpoint))
