@@ -1,7 +1,7 @@
 """The one owner of every persisted and checkpointed frame in the package.
 
 A scope (:func:`materialize_scope`) releases every frame registered in
-it on exit, checkpoints included; persisting an already persisted frame
+it on exit, checkpoints included; materializing an already persisted frame
 inside a scope hands it to that scope.  Outside any scope, persisted
 frames older than the newest ``_KEEP`` are unpersisted as new ones
 register, and a checkpoint is never released: unpersisting a local
